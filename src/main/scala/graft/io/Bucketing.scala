@@ -205,9 +205,12 @@ object Bucketing {
     * failure propagates only after both finished, so no caller ever
     * leaks a still-running sibling job.
     *
-    * Caller contract: the two actions must touch DIFFERENT tables and
-    * must not mutate shared session conf (the writers here use
-    * per-write options precisely for that). */
+    * Caller contract: the two actions must touch DIFFERENT tables.
+    * Both threads share the session conf, so the ONLY conf mutation
+    * allowed inside either action is the ref-counted
+    * [[withDynamicOverwrite]] pin (its count keeps one writer's restore
+    * from flipping the sibling's still-planning insert). Any other
+    * session-conf mutation inside `concurrently` is forbidden. */
   def concurrently(a: => Unit, b: => Unit): Unit = {
     @volatile var bErr: Throwable = null
     val t = new Thread(() => try b catch { case e: Throwable => bErr = e })
@@ -377,9 +380,10 @@ object Bucketing {
   /** AUTO-COMPACTION CADENCE for streamed per-batch index maintenance:
     * once `everyBatches` NEW batch_id partitions have landed since the
     * last fold, run the crash-safe [[compactBucketed]] swap and stamp
-    * the cursor. This is the policy the round-16 ProbeCompact
-    * measurement asked for: accumulated per-batch file waves double
-    * streamed-probe cost by the ~80x index point (each append fans one
+    * the cursor. This is the policy the round-16 compaction
+    * measurement asked for (PROFILE_r16.md, PROBE_SCALING.md):
+    * accumulated per-batch file waves double streamed-probe cost by
+    * the ~80x index point (each append fans one
     * wave of files into every bucket), and compaction recovers it
     * (q73 probe 1.36 -> 0.63 s, q71 1.75 -> 0.81 s) — but until now a
     * user had to know to run it. Wired into `runIndexMaintenance`, so

@@ -7,8 +7,9 @@ package graft.io
   * fires exactly one per rep) or just hit ambient contention. Every
   * fold rewrite now records itself here: a one-line stderr note (cheap
   * — folds are cadence events, not per-row work) and a JVM-global
-  * counter profiling harnesses read per rep
-  * (`ProfileArb` prints the delta next to each rep's time).
+  * counter profiling harnesses read per rep (PROFILE_r19.md,
+  * PROFILE_r20.md and PROFILE_r22.md report the delta next to each
+  * rep's time).
   */
 object FoldEvents {
 

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.MinHashSig
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -39,11 +40,15 @@ object Dedup {
   // MinHashSig's scaladoc: 31-bit bases made the affine family largely
   // order-preserving, so the k permutations elected the same argmin and
   // the agreement estimator deviated by many sigma on real pairs);
-  // constants from a fixed seed for determinism.
-  private val MinhashP = (1L << 61) - 1
-  private def coeffs(k: Int, seed: Long): (Seq[Long], Seq[Long]) = {
-    val rnd = new java.util.Random(seed)
-    def draw() = math.abs(rnd.nextLong()) % (MinhashP - 1)
+  // constants from a fixed seed for determinism. The ONE coefficient
+  // draw: the SQL minhash_sig builder calls it too, so both surfaces
+  // sign bit-equal. abs is taken after the reduction, never before:
+  // math.abs(Long.MinValue) is negative. This equals the earlier
+  // abs-then-reduce draw for every other long, so persisted signatures
+  // still match (floorMod would change every draw from a negative long).
+  private[graft] def coeffs(k: Int): (Seq[Long], Seq[Long]) = {
+    val rnd = new java.util.Random(42L)
+    def draw() = math.abs(rnd.nextLong() % (MinHashSig.M - 1))
     (Seq.fill(k)(draw() + 1), Seq.fill(k)(draw()))
   }
 
@@ -53,9 +58,9 @@ object Dedup {
     * Narrow, no shuffle.
     */
   def minhashSignature(text: Column, k: Int = 64, shingleN: Int = 2): Column = {
-    val (a, b) = coeffs(k, seed = 42L)
+    val (a, b) = coeffs(k)
     graft.functions.TextFunctions.minhash_sig(
-      TextAnalysis.tokens(text), shingleN, a.toArray, b.toArray, MinhashP)
+      TextAnalysis.tokens(text), shingleN, a.toArray, b.toArray, MinHashSig.M)
   }
 
   /** LSH candidate pairs: signatures banded (bands x rowsPerBand = k);

@@ -439,7 +439,7 @@ object Similarity {
       graft.io.Bucketing.LshBitsProperty -> bitsPerTable.toString)
     // the two tables share no state, so their writes overlap (guide
     // §2.6, optimization r22): per micro-batch the vecs write used to
-    // wait out the full bands job (ProfileQ71 measured bands ~0.48 s +
+    // wait out the full bands job (OPTIMIZATION_r22.md: bands ~0.48 s +
     // vecs ~0.25 s per batch, sequential); concurrent submission makes
     // the pair cost ~max of the two
     graft.io.Bucketing.concurrently({

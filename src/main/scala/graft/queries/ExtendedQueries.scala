@@ -258,9 +258,9 @@ object ExtendedQueries {
     // (fewer scans) measured 1.7x SLOWER at sf0.1: mixing two distinct
     // columns with non-distinct aggregates forces a 3-projection Expand
     // whose wide-key partial aggregation carries the HLL sketches and
-    // conditional counts across the whole tripled stream (ProbeQ24:
-    // all4_one_agg 4.4-9.5 s vs exact 1.5 s + approx/rank 1.2 s run
-    // apart). Scan count is the cheap resource here — shuffled partial
+    // conditional counts across the whole tripled stream (measured at
+    // sf0.1: all4_one_agg 4.4-9.5 s vs exact 1.5 s + approx/rank 1.2 s
+    // run apart; OPTIMIZATION_r21.md pins this plan). Scan count is the cheap resource here — shuffled partial
     // state is identical either way, and each narrow pass stays in one
     // whole-stage-codegen span.
     val exact = li.groupBy(col("l_returnflag")).agg(

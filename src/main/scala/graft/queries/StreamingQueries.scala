@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.streaming.EventsStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Catalog rows that run the ACTUAL Structured Streaming engine — not a
@@ -44,72 +44,133 @@ object StreamingQueries {
       }
     })
 
-  /** Copy the events fixture into a landing directory as-is (one part
-    * file per fixture part, deterministic names). Idempotent:
-    * REPLACE_EXISTING keeps names stable, so a re-run lands no NEW files
-    * and a checkpointed stream over the directory is a no-op — which is
-    * what makes multi-rep benching measure a warm, idempotent pipeline.
-    */
-  private def landFixture(dir: String, landing: String): Unit = {
-    new java.io.File(landing).mkdirs()
-    // fixture today is a single parquet file; if it ever becomes a
-    // directory-style dataset, copy every part file rather than silently
-    // landing an empty dir (the stream would emit nothing and the
-    // failure would only surface at oracle-compare time)
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    val parts: Seq[java.nio.file.Path] =
-      if (java.nio.file.Files.isRegularFile(src)) Seq(src)
-      else if (java.nio.file.Files.isDirectory(src)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.list(src).iterator().asScala
-          .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-            java.nio.file.Files.isRegularFile(p))
-          .toSeq.sortBy(_.getFileName.toString)
-      } else sys.error(s"streaming fixture $src is neither a file nor a directory")
-    require(parts.nonEmpty, s"no parquet part files under $src")
-    parts.zipWithIndex.foreach { case (p, i) =>
-      java.nio.file.Files.copy(p,
-        java.nio.file.Paths.get(landing, f"events_$i%05d.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  /** The ONE landing primitive of every streaming row: write `rows` as
+    * `nSlices` part files, row r into file `slice(r)` (an int in
+    * [0, nSlices)), stamped with ascending modification times so the
+    * file source batches them in slice order. One write job for all
+    * slices (optimization r21): repartitioning on the slice tag routes
+    * each slice to one task, so each __slice=i directory holds one part
+    * file, and the tag is directory-encoded so the landed files keep
+    * `rows`' schema. `slice` is by-name: it is built only when the
+    * landing is.
+    *
+    * Idempotent and crash-safe: the build runs under the per-path
+    * landing lock (shared landings have concurrent callers) and ends
+    * with a terminal marker (TempPaths.isComplete), so a re-run lands
+    * no new files — a checkpointed stream over the directory is a
+    * no-op, which is what makes multi-rep benching measure a warm,
+    * idempotent pipeline — and a kill mid-landing re-lands instead of
+    * handing the stream a partial fixture. Row order WITHIN a landed
+    * file is not defined (ADVICE r21): fine for the order-insensitive
+    * streamed consumers here; a row-hashing consumer must sort. */
+  private def landSlices(spark: SparkSession, landing: String, rows: DataFrame,
+                         nSlices: Int, slice: => Column): Unit =
+    graft.io.TempPaths.withLandingLock(landing) {
+      if (!graft.io.TempPaths.isComplete(landing)) {
+        new java.io.File(landing).mkdirs()
+        // staging through TempPaths: owned by this app (sweepStale can
+        // reclaim it if we crash mid-landing) and removed on exit
+        val staging = java.nio.file.Paths.get(
+          graft.io.TempPaths.uniqueScratchDir(spark, "graft_land_stage", landing))
+        java.nio.file.Files.createDirectories(staging)
+        rows.withColumn("__slice", slice)
+          .repartition(nSlices, col("__slice"))
+          .write.mode("overwrite").partitionBy("__slice")
+          .parquet(staging.toString)
+        (0 until nSlices).foreach { i =>
+          // an EMPTY slice produces no __slice=i directory (a scale
+          // factor where a modulo slice selects nothing — ADVICE r21):
+          // skip it; the stream sees one batch fewer
+          Option(staging.resolve(s"__slice=$i").toFile.listFiles()).toSeq
+            .flatten.filter(_.getName.endsWith(".parquet")).headOption
+            .foreach { part =>
+              java.nio.file.Files.move(part.toPath,
+                java.nio.file.Paths.get(landing, f"slice_$i%05d.parquet"),
+                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+            }
+        }
+        org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
+        // the file source orders batches by MODIFICATION TIME. Fail
+        // LOUDLY if the filesystem refuses one: a later slice batching
+        // first could advance the watermark and silently drop earlier
+        // rows as late — a nondeterministic oracle mismatch instead of
+        // a setup error
+        val parts = Option(new java.io.File(landing).listFiles()).toSeq.flatten
+          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+        val base = System.currentTimeMillis() - parts.length * 10000L
+        parts.zipWithIndex.foreach { case (f, i) =>
+          require(f.setLastModified(base + i * 10000L),
+            s"failed to set mtime on $f — cannot guarantee batch order")
+        }
+        graft.io.TempPaths.markComplete(landing)
+      }
+    }
+
+  /** The events fixture as stored (ts keeps its file encoding), so the
+    * landed schema is what readEventsStream declares. */
+  private def rawEvents(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/events.parquet")
+
+  /** Slice index of each raw event by DETERMINISTIC time quartile
+    * (q56, q58, q66, q67): boundaries t_i = min_us + (span * i) / n in
+    * exact integer microsecond arithmetic, so the oracle can replay the
+    * split bit-for-bit (unlike repartitionByRange's SAMPLED boundaries).
+    * Slice i holds ts ∈ [t_i, t_{i+1}); landed in slice order, each
+    * batch advances the watermark past the previous range and nothing
+    * is ever late. Runs one min/max job — [[landSlices]] takes the
+    * slice by name, so a complete landing never pays it. */
+  private def timeQuarter(raw: DataFrame, n: Int): Column = {
+    // exact microseconds regardless of the fixture's ts encoding
+    // (nanos-as-long vs timestamp; the oracle replays epoch_us(ts))
+    val tsUs = raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType => expr("ts div 1000")
+      case _ => unix_micros(col("ts").cast("timestamp"))
+    }
+    val bounds = raw.agg(min(tsUs).as("mn"), max(tsUs).as("mx"))
+      .collect().head
+    val (mnUs, mxUs) = (bounds.getLong(0), bounds.getLong(1))
+    val span = mxUs - mnUs + 1
+    def bound(i: Int): Long = mnUs + span * i / n
+    // compare against the same integer-division boundary literals, NOT
+    // floor((ts-mn)*n/span), whose rounding disagrees with bound() at
+    // boundary microseconds
+    (1 until n).foldRight(lit(n - 1)) {
+      (i, rest) => when(tsUs < bound(i), i - 1).otherwise(rest)
     }
   }
 
-  /** Land the events fixture split into `nFiles` ts-range part files —
-    * the multi-micro-batch landing for q56. Guarded on a terminal
-    * marker, not on "any parquet present": a driver killed mid-landing
-    * leaves a partial fixture that an any-file guard would accept
-    * forever, surfacing as an oracle mismatch instead of a re-land
-    * (TempPaths.isComplete). The guard matters doubly here because a
-    * range-partitioned rewrite generates fresh task-UUID file names
-    * every call — re-landing under new names would make the file source
-    * reprocess everything each rep. */
-  private def landFixtureSplit(spark: SparkSession, dir: String,
-                               landing: String, nFiles: Int): Unit = {
-    if (!graft.io.TempPaths.isComplete(landing)) {
-      // raw read (ts stays a nanos long) so the landed schema matches
-      // what readEventsStream declares
-      spark.read.parquet(s"$dir/events.parquet")
-        .repartitionByRange(nFiles, col("ts"))
-        .write.mode("overwrite").parquet(landing)
-      // the file source orders batches by MODIFICATION TIME, and the
-      // range write's parallel tasks finish in arbitrary order — without
-      // explicit ascending modTimes a later-ts part could batch before
-      // an earlier-ts one, advance the watermark, and get the earlier
-      // part's rows dropped as late (range part index N = ts range N,
-      // so name order is time order)
-      val parts = Option(new java.io.File(landing).listFiles()).get
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val base = System.currentTimeMillis() - parts.length * 10000L
-      parts.zipWithIndex.foreach { case (f, i) =>
-        // fail LOUDLY if the filesystem refuses the mtime: without the
-        // ascending-modTime guarantee a later-ts part could batch first,
-        // advance the watermark, and silently drop earlier rows as late —
-        // a nondeterministic oracle mismatch instead of a setup error
-        require(f.setLastModified(base + i * 10000L),
-          s"failed to set mtime on $f — cannot guarantee batch order")
-      }
-      graft.io.TempPaths.markComplete(landing)
+  /** `slices` unioned, each tagged with its index as `__slice` — the
+    * [[landSlices]] input for a batch sequence that is not a split of
+    * one frame (q81-q83: a RETRACTION batch rides between append
+    * batches). All slices must share one schema. */
+  private def inOrder(slices: DataFrame*): DataFrame =
+    slices.zipWithIndex.map { case (s, i) => s.withColumn("__slice", lit(i)) }
+      .reduce(_.unionByName(_))
+
+  /** The landings several rows consume, each an `id % 4` split landed
+    * once per app under one prefix (lock and marker in [[landSlices]]).
+    * Only the LANDING is shared; each row keeps its own checkpoint,
+    * sink and metrics dirs.
+    *  - "events": the whole events fixture by event_id — q59, q60, q61
+    *    and q65. The split is deterministic, so q60/q65's per-batch
+    *    numbers are oracle-replayable; q59's interval join is
+    *    split-independent (its 90-day horizon exceeds the fixture span).
+    *  - "corpus": the [[corpusSide]] documents by doc_id — q68, q69,
+    *    q70, q73, q79, q80. Every index they maintain is
+    *    split-independent (partials sum to the global answer whatever
+    *    the batching).
+    *  - "docs": all documents by doc_id — q75-q78's profiling sketches
+    *    and vocabulary counts. */
+  private def sharedLanding(spark: SparkSession, dir: String, fixture: String): String = {
+    val (prefix, rows, id) = fixture match {
+      case "events" => ("graft_evmod_in", rawEvents(spark, dir), "event_id")
+      case "corpus" => ("graft_q68_in",
+        Tables.documents(spark, dir).filter(corpusSide(col("doc_id"))), "doc_id")
+      case "docs" => ("graft_q75_in", Tables.documents(spark, dir), "doc_id")
     }
+    val landing = graft.io.TempPaths.scratchDir(spark, prefix, dir)
+    landSlices(spark, landing, rows, 4, pmod(col(id), lit(4)))
+    landing
   }
 
   /** q54 — watermarked hourly aggregation executed by the streaming
@@ -138,7 +199,7 @@ object StreamingQueries {
     val landing = graft.io.TempPaths.scratchDir(spark, "graft_q54_in", dir)
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q54_ckpt", dir)
     val out = graft.io.TempPaths.scratchDir(spark, "graft_q54_out", dir)
-    landFixture(dir, landing)
+    landSlices(spark, landing, rawEvents(spark, dir), 1, lit(0))
     EventsStream.runAvailableNow(spark, landing, ckpt, out, statePartitions)
     val mx = Tables.events(spark, dir)
       .agg(max(unix_millis(col("ts"))).as("mx_ms"))
@@ -163,11 +224,11 @@ object StreamingQueries {
       |WHERE epoch_ms(hr) + 3600000 <= mx_ms - 1800000 - 3600000""".stripMargin
 
   /** q56 — streaming keyed dedup (`dropDuplicatesWithinWatermark`)
-    * executed ACROSS micro-batches: the fixture lands as four ts-range
-    * files and `maxFilesPerTrigger=1` forces AvailableNow to run four
-    * batches, so a duplicate of a key first seen in batch 1 is dropped
-    * by a state-store lookup in batch 3 — the cross-batch path a
-    * single-batch run would never touch. Key is (hour, user, type),
+    * executed ACROSS micro-batches: the fixture lands as four
+    * time-quartile files ([[timeQuarter]]) and `maxFilesPerTrigger=1`
+    * forces AvailableNow to run four batches, so a duplicate of a key
+    * first seen in batch 1 is dropped by a state-store lookup in batch
+    * 3 — the cross-batch path a single-batch run would never touch. Key is (hour, user, type),
     * the same survivor-key set as batch q41.
     *
     * The watermark horizon (90 days) exceeds the fixture's 30-day span,
@@ -182,7 +243,8 @@ object StreamingQueries {
     val landing = graft.io.TempPaths.scratchDir(spark, "graft_q56_in", dir)
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q56_ckpt", dir)
     val out = graft.io.TempPaths.scratchDir(spark, "graft_q56_out", dir)
-    landFixtureSplit(spark, dir, landing, nFiles = 4)
+    val raw = rawEvents(spark, dir)
+    landSlices(spark, landing, raw, 4, timeQuarter(raw, 4))
     val keyed = EventsStream
       .readEventsStream(spark, landing, maxFilesPerTrigger = Some(1))
       .withColumn("hour",
@@ -220,7 +282,7 @@ object StreamingQueries {
     val landing = graft.io.TempPaths.scratchDir(spark, "graft_q57_in", dir)
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q57_ckpt", dir)
     val out = graft.io.TempPaths.scratchDir(spark, "graft_q57_out", dir)
-    landFixture(dir, landing)
+    landSlices(spark, landing, rawEvents(spark, dir), 1, lit(0))
     val ev = EventsStream.readEventsStream(spark, landing)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -235,7 +297,7 @@ object StreamingQueries {
 
   /** q58 — sessionization under the STREAMING contract: event-time
     * timeouts + watermark-proved completion, run across four
-    * micro-batches (ts-range landing with ascending modTimes +
+    * micro-batches (time-quartile landing with ascending modTimes +
     * `maxFilesPerTrigger=1`). Unlike q57's one-batch NoTimeout form,
     * per-user state here genuinely persists across batches: a session
     * begun in batch 1 can be extended in batch 2 and is emitted either
@@ -254,7 +316,8 @@ object StreamingQueries {
     val landing = graft.io.TempPaths.scratchDir(spark, "graft_q58_in", dir)
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q58_ckpt", dir)
     val out = graft.io.TempPaths.scratchDir(spark, "graft_q58_out", dir)
-    landFixtureSplit(spark, dir, landing, nFiles = 4)
+    val raw = rawEvents(spark, dir)
+    landSlices(spark, landing, raw, 4, timeQuarter(raw, 4))
     val ev = EventsStream.readEventsStream(spark, landing, maxFilesPerTrigger = Some(1))
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -307,7 +370,7 @@ object StreamingQueries {
     * windowed agg (q54), keyed dedup (q56), sessionization (q57/q58),
     * stream-stream join (q59). */
   def q59StreamingIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    val landing = sharedEventsModuloLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "events")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q59_ckpt", dir)
     val out = graft.io.TempPaths.scratchDir(spark, "graft_q59_out", dir)
     val joined = EventsStream.clickToViewJoin(
@@ -318,86 +381,6 @@ object StreamingQueries {
       .select(col("click_id"), col("view_id"), col("user_id"),
         unix_micros(col("click_ts")).as("click_us"),
         unix_micros(col("view_ts")).as("view_us"))
-  }
-
-  /** Land the events fixture split into `nFiles` part files by
-    * `event_id % nFiles` — the DETERMINISTIC split q60 needs: its
-    * output hashes PER-BATCH numbers, so each batch's contents must be
-    * engine-replayable (a ts-range split's boundaries come from range
-    * sampling, which the oracle cannot replay). Ascending modTimes pin
-    * batch order = index order; ts values interleave across files, which
-    * is harmless here because the watermark horizon exceeds the fixture
-    * span (nothing is ever late). */
-  private def landFixtureModulo(spark: SparkSession, dir: String,
-                                landing: String, nFiles: Int): Unit = {
-    // terminal-marker guard (TempPaths.isComplete): a kill after 2 of 4
-    // moves must re-land, not hand the stream a partial fixture
-    if (!graft.io.TempPaths.isComplete(landing)) {
-      new java.io.File(landing).mkdirs()
-      // TempPaths-owned staging (appId in the name + exit-hook cleanup):
-      // a bare createTempDirectory here strands an anonymous dir on a
-      // mid-land kill that only the 2h idle sweep can reclaim
-      val staging = java.nio.file.Paths.get(
-        graft.io.TempPaths.uniqueScratchDir(spark, "graft_q60_stage", landing))
-      java.nio.file.Files.createDirectories(staging)
-      // ONE write job for all slices (the landSlices device, r21): the
-      // per-slice filter+coalesce loop paid one scan + job round-trip
-      // per slice inside the timed row. The modulo tag routes each
-      // slice to one task, so each __slice=i directory holds exactly
-      // one part file and the partition column never enters the files.
-      spark.read.parquet(s"$dir/events.parquet")
-        .withColumn("__slice", col("event_id") % nFiles)
-        .repartition(nFiles, col("__slice"))
-        .write.mode("overwrite").partitionBy("__slice")
-        .parquet(staging.toString)
-      (0 until nFiles).foreach { i =>
-        // an EMPTY slice legally produces no __slice=i directory under
-        // the dynamic-partition write (a skewed or tiny scale factor
-        // where a modulo slice selects nothing — ADVICE r21); skip it
-        // instead of NPE-ing on .get/.head. Batch ordering compresses,
-        // which the downstream stream handles like any absent file.
-        Option(staging.resolve(s"__slice=$i").toFile.listFiles()).toSeq
-          .flatten.filter(_.getName.endsWith(".parquet")).headOption
-          .foreach { part =>
-            java.nio.file.Files.move(part.toPath,
-              java.nio.file.Paths.get(landing, f"events_$i%05d.parquet"),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          }
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      val parts = Option(new java.io.File(landing).listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val base = System.currentTimeMillis() - parts.length * 10000L
-      parts.zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(base + i * 10000L),
-          s"failed to set mtime on $f — cannot guarantee batch order")
-      }
-      graft.io.TempPaths.markComplete(landing)
-    }
-  }
-
-  /** The SHARED events modulo landing (optimization r22, VERDICT r21
-    * item 4 — the q68/q70/q73 shared-landing device applied to the
-    * events fixture): q59, q60, q61 and q65 all consume the SAME
-    * deterministic `event_id % 4` split of one fixture, so they land it
-    * under ONE path — any epoch-0 context running several of these rows
-    * (Verify, tests, ad-hoc sessions) pays one landing instead of four.
-    * q59 previously landed a ts-range split; its output is
-    * split-independent (the 90-day horizon exceeds the fixture span, so
-    * the inner interval join emits exactly the batch join whatever the
-    * batching — q65 already runs the identical operator over this
-    * modulo landing and hash-pins its state accounting). Scratch
-    * lifecycles stay isolated: only the LANDING is shared; each row
-    * keeps its own checkpoint/sink/metrics dirs. Locked like every
-    * shared landing — concurrent callers must not interleave part-file
-    * moves / mtime stamping. */
-  private def sharedEventsModuloLanding(spark: SparkSession,
-                                        dir: String): String = {
-    val landing = graft.io.TempPaths.scratchDir(spark, "graft_evmod_in", dir)
-    graft.io.TempPaths.withLandingLock(landing) {
-      landFixtureModulo(spark, dir, landing, nFiles = 4)
-    }
-    landing
   }
 
   /** q60 — the STREAMING ENGINE'S OWN METRICS as a hash-checked row:
@@ -416,7 +399,7 @@ object StreamingQueries {
     * so a checkpoint-resumed re-run (no new files → no new batches →
     * empty progress) stays idempotent like every other streaming row. */
   def q60StreamingMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val landing = sharedEventsModuloLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "events")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q60_ckpt", dir)
     val out = graft.io.TempPaths.scratchDir(spark, "graft_q60_out", dir)
     val metricsDir = graft.io.TempPaths.scratchDir(spark, "graft_q60_metrics", dir)
@@ -471,7 +454,7 @@ object StreamingQueries {
     * RecoverySpec, and by replaying a committed batch in
     * StreamingSpec). */
   def q61StreamingUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val landing = sharedEventsModuloLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "events")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q61_ckpt", dir)
     val target = graft.io.TempPaths.scratchDir(spark, "graft_q61_tbl", dir)
     graft.streaming.UpsertSink.runUpsertLatest(
@@ -505,7 +488,7 @@ object StreamingQueries {
     * operator reading this metric on a self-join stream must know that,
     * which is exactly why the row pins it. */
   def q65StreamingJoinMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val landing = sharedEventsModuloLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "events")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q65_ckpt", dir)
     val out = graft.io.TempPaths.scratchDir(spark, "graft_q65_out", dir)
     val metricsDir = graft.io.TempPaths.scratchDir(spark, "graft_q65_metrics", dir)
@@ -541,72 +524,6 @@ object StreamingQueries {
       |    AS BIGINT) AS state_rows_total
       |FROM per p""".stripMargin
 
-  /** Land the events fixture split into `nFiles` part files by
-    * DETERMINISTIC time quartiles — boundaries t_i = min_us +
-    * (span * i) / nFiles in exact integer microsecond arithmetic, so
-    * the oracle can replay the split bit-for-bit (unlike
-    * repartitionByRange's SAMPLED boundaries). File i holds
-    * ts ∈ [t_i, t_{i+1}); ascending modTimes pin batch order = time
-    * order, so each batch advances the watermark past the previous
-    * range and nothing is ever late. */
-  private def landFixtureTimeQuarters(spark: SparkSession, dir: String,
-                                      landing: String, nFiles: Int): Unit = {
-    if (!graft.io.TempPaths.isComplete(landing)) {
-      new java.io.File(landing).mkdirs()
-      val raw = spark.read.parquet(s"$dir/events.parquet")
-      // exact microseconds regardless of the fixture's ts encoding
-      // (nanos-as-long vs timestamp; the oracle replays epoch_us(ts))
-      val tsUs = raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType => expr("ts div 1000")
-        case _ => unix_micros(col("ts").cast("timestamp"))
-      }
-      val bounds = raw.agg(min(tsUs).as("mn"), max(tsUs).as("mx"))
-        .collect().head
-      val (mnUs, mxUs) = (bounds.getLong(0), bounds.getLong(1))
-      val span = mxUs - mnUs + 1
-      def bound(i: Int): Long = mnUs + span * i / nFiles
-      // TempPaths-owned staging — same rationale as landFixtureModulo
-      val staging = java.nio.file.Paths.get(
-        graft.io.TempPaths.uniqueScratchDir(spark, "graft_quarters_stage", landing))
-      java.nio.file.Files.createDirectories(staging)
-      // ONE write job for all slices (the landSlices device, r21): the
-      // per-slice filter+coalesce loop paid one scan + job round-trip
-      // per quartile. The slice tag mirrors the bound() windows
-      // EXACTLY — derived by comparing against the same integer-
-      // division boundary literals, NOT by re-deriving floor((ts-mn)*
-      // n/span), whose integer rounding disagrees with bound() at
-      // boundary microseconds.
-      val sliceCol = (1 until nFiles).foldRight(lit(nFiles - 1): org.apache.spark.sql.Column) {
-        (i, rest) => when(tsUs < bound(i), i - 1).otherwise(rest)
-      }
-      spark.read.parquet(s"$dir/events.parquet")
-        .withColumn("__slice", sliceCol)
-        .repartition(nFiles, col("__slice"))
-        .write.mode("overwrite").partitionBy("__slice")
-        .parquet(staging.toString)
-      (0 until nFiles).foreach { i =>
-        // empty quartile ⇒ no __slice=i directory (ADVICE r21): skip,
-        // don't NPE — see landFixtureModulo
-        Option(staging.resolve(s"__slice=$i").toFile.listFiles()).toSeq
-          .flatten.filter(_.getName.endsWith(".parquet")).headOption
-          .foreach { part =>
-            java.nio.file.Files.move(part.toPath,
-              java.nio.file.Paths.get(landing, f"events_$i%05d.parquet"),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          }
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      val parts = Option(new java.io.File(landing).listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val base = System.currentTimeMillis() - parts.length * 10000L
-      parts.zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(base + i * 10000L),
-          s"failed to set mtime on $f — cannot guarantee batch order")
-      }
-      graft.io.TempPaths.markComplete(landing)
-    }
-  }
-
   /** q66 — SESSIONIZER STATE metrics as a hash-checked row: the
     * event-time sessionizer (q58's operator) runs across four
     * deterministic time-quartile micro-batches and the row emits the
@@ -638,7 +555,8 @@ object StreamingQueries {
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q66_ckpt", dir)
     val out = graft.io.TempPaths.scratchDir(spark, "graft_q66_out", dir)
     val metricsDir = graft.io.TempPaths.scratchDir(spark, "graft_q66_metrics", dir)
-    landFixtureTimeQuarters(spark, dir, landing, nFiles = 4)
+    val raw = rawEvents(spark, dir)
+    landSlices(spark, landing, raw, 4, timeQuarter(raw, 4))
     if (!graft.io.TempPaths.isComplete(metricsDir)) {
       val ev = EventsStream
         .readEventsStream(spark, landing, maxFilesPerTrigger = Some(1))
@@ -722,7 +640,8 @@ object StreamingQueries {
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q67_ckpt", dir)
     val out = graft.io.TempPaths.scratchDir(spark, "graft_q67_out", dir)
     val metricsDir = graft.io.TempPaths.scratchDir(spark, "graft_q67_metrics", dir)
-    landFixtureTimeQuarters(spark, dir, landing, nFiles = 4)
+    val raw = rawEvents(spark, dir)
+    landSlices(spark, landing, raw, 4, timeQuarter(raw, 4))
     if (!graft.io.TempPaths.isComplete(metricsDir)) {
       val ev = EventsStream
         .readEventsStream(spark, landing, maxFilesPerTrigger = Some(1))
@@ -799,106 +718,6 @@ object StreamingQueries {
   private[graft] def deltaSide(c: org.apache.spark.sql.Column) =
     c % CorpusSplitModulus === 0
 
-  /** The SHARED corpus landing q68 (line-df) and q70 (bm25-df) both
-    * maintain their streamed index from: one prefix, one split, one
-    * lock — lands once per app, concurrent callers serialize on the
-    * landing-dir lock. Returns the landing path. */
-  private def sharedCorpusLanding(spark: SparkSession, dir: String): String = {
-    val landing = graft.io.TempPaths.scratchDir(spark, "graft_q68_in", dir)
-    landDocsCorpusModulo(spark, dir, landing, nFiles = 4)
-    landing
-  }
-
-  /** Land the CORPUS side of the line-dedup split ([[corpusSide]], the
-    * p63 convention) into `nFiles` part files keyed on doc_id modulo —
-    * any deterministic DISJOINT split works, because the index the
-    * stream maintains is split-independent (partial dfs sum to the
-    * global df whatever the batching). Ascending mtimes pin batch order
-    * for reproducible batch ids. The whole isComplete/build/markComplete
-    * sequence runs under the per-path landing lock: the dir is shared
-    * (q68 + q70), and two concurrent callers must not both see
-    * `!isComplete` and interleave part-file moves / mtime stamping. */
-  private def landDocsCorpusModulo(spark: SparkSession, dir: String,
-                                   landing: String, nFiles: Int): Unit =
-    landSlicedModulo(spark, dir, landing,
-      spark.read.parquet(s"$dir/documents.parquet")
-        .filter(corpusSide(col("doc_id"))), "doc_id", nFiles)
-
-  /** Generic modulo landing: split `rows` (any side-filtered fixture
-    * slice) into `nFiles` part files keyed on `idCol` modulo and land
-    * them with ascending mtimes — the device every streamed-index row
-    * shares. Locked + completion-markered exactly like
-    * [[landDocsCorpusModulo]] (which delegates here). */
-  private def landSlicedModulo(spark: SparkSession, dir: String,
-                               landing: String, rows: DataFrame,
-                               idCol: String, nFiles: Int): Unit =
-    landSlices(spark, dir, landing, (0 until nFiles).map(i =>
-      rows.filter(pmod(col(idCol), lit(nFiles)) === i)))
-
-  /** EXPLICIT-slice landing: write each frame of `slices` as one
-    * ordered part file (ascending mtimes pin batch ids). The general
-    * form [[landSlicedModulo]] delegates to — q81 needs it because its
-    * batch sequence is not a modulo split (a RETRACTION batch rides
-    * between append batches). Same lock + completion discipline.
-    *
-    * Contract (ADVICE r21, inherited from the one-job landing): all
-    * slices must share ONE schema (they are unioned by name into the
-    * single tagged write), `slices` must be non-empty, and row order
-    * WITHIN a landed file is not defined (the repartition's exchange
-    * replaces the old coalesce(1)'s scan order) — fine for the
-    * order-insensitive streamed consumers here; a future row-hashing
-    * consumer must sort. */
-  private def landSlices(spark: SparkSession, dir: String,
-                         landing: String, slices: Seq[DataFrame]): Unit =
-    graft.io.TempPaths.withLandingLock(landing) {
-    require(slices.nonEmpty, "landSlices needs at least one slice — an " +
-      "empty landing would mark itself complete and starve the stream")
-    if (!graft.io.TempPaths.isComplete(landing)) {
-      new java.io.File(landing).mkdirs()
-      // staging through TempPaths: owned by this app (sweepStale can
-      // reclaim it if we crash mid-landing) and removed on exit
-      val staging = java.nio.file.Paths.get(
-        graft.io.TempPaths.uniqueScratchDir(spark, "graft_land_stage", dir))
-      java.nio.file.Files.createDirectories(staging)
-      // ONE write job for all slices (optimization r21, guide §1.2
-      // step 1): the per-slice `coalesce(1).write` loop paid one full
-      // scan + job round-trip PER slice inside the timed row — 4-5
-      // sequential jobs for what is one pass of data. Tag each slice
-      // with its index, union, and dynamic-partition the single write:
-      // repartition on the tag routes every slice to exactly one task,
-      // so each __slice=i directory holds exactly one part file (the
-      // coalesce(1) guarantee, kept), and the partition column is
-      // directory-encoded so the landed files keep the original schema.
-      val tagged = slices.zipWithIndex.map { case (s, i) =>
-        s.withColumn("__slice", lit(i)) }.reduce(_.unionByName(_))
-      tagged.repartition(slices.size, col("__slice"))
-        .write.mode("overwrite").partitionBy("__slice")
-        .parquet(staging.toString)
-      slices.indices.foreach { i =>
-        // an EMPTY slice can legally produce no partition directory (a
-        // scale factor where a modulo slice selects nothing); skip it
-        // rather than NPE — the downstream foreachBatch loops all guard
-        // empty batches, and batch ordering simply compresses
-        Option(staging.resolve(s"__slice=$i").toFile.listFiles()).toSeq
-          .flatten.filter(_.getName.endsWith(".parquet")).headOption
-          .foreach { part =>
-            java.nio.file.Files.move(part.toPath,
-              java.nio.file.Paths.get(landing, f"docs_$i%05d.parquet"),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          }
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(staging.toFile)
-      val parts = Option(new java.io.File(landing).listFiles()).get
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val base = System.currentTimeMillis() - parts.length * 10000L
-      parts.zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(base + i * 10000L),
-          s"failed to set mtime on $f — cannot guarantee batch order")
-      }
-      graft.io.TempPaths.markComplete(landing)
-    }
-  }
-
   /** q68 — STREAMING INDEX MAINTENANCE: the line-df dedup index (p63's
     * corpus side) built by the STREAMING engine instead of one batch
     * job. The corpus lands as four files; `foreachBatch` under
@@ -918,7 +737,7 @@ object StreamingQueries {
     * and every delta is gated against it without ever re-reading
     * history. */
   def q68StreamingLineIndex(spark: SparkSession, dir: String): DataFrame = {
-    val landing = sharedCorpusLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "corpus")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q68_ckpt", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q68_linedf", dir)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
@@ -945,10 +764,9 @@ object StreamingQueries {
     * passage-removal gate, like the line-dedup gate, can ride a
     * continuously-ingesting corpus without ever re-reading history. */
   def q69StreamingWindowIndex(spark: SparkSession, dir: String): DataFrame = {
-    val landing = graft.io.TempPaths.scratchDir(spark, "graft_q69_in", dir)
+    val landing = sharedLanding(spark, dir, "corpus")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q69_ckpt", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q69_windf", dir)
-    landDocsCorpusModulo(spark, dir, landing, nFiles = 4)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
       graft.ops.Dedup.appendWindowDfPartial(spark, b, idxTbl, id, k = 8)
     }
@@ -976,7 +794,7 @@ object StreamingQueries {
     * where the index rides the ingest stream and no day ever re-reads
     * history. */
   def q70StreamingBm25Index(spark: SparkSession, dir: String): DataFrame = {
-    val landing = sharedCorpusLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "corpus")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q70_ckpt", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q70_bm25df", dir)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
@@ -1081,8 +899,8 @@ object StreamingQueries {
   def q71StreamingVectorIndex(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val landing = graft.io.TempPaths.scratchDir(spark, "graft_q71_in", dir)
-    landSlicedModulo(spark, dir, landing,
-      emb.filter(corpusSide(col("vec_id"))), "vec_id", nFiles = 4)
+    landSlices(spark, landing, emb.filter(corpusSide(col("vec_id"))), 4,
+      pmod(col("vec_id"), lit(4)))
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q71_ckpt", dir)
     val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q71_vbands", dir)
     val vecsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q71_vecs", dir)
@@ -1114,8 +932,8 @@ object StreamingQueries {
   def q72StreamingGramIndex(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val landing = graft.io.TempPaths.scratchDir(spark, "graft_q72_in", dir)
-    landSlicedModulo(spark, dir, landing,
-      docs.filter(pmod(col("doc_id"), lit(10)) === 0), "doc_id", nFiles = 4)
+    landSlices(spark, landing, docs.filter(pmod(col("doc_id"), lit(10)) === 0),
+      4, pmod(col("doc_id"), lit(4)))
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q72_ckpt", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q72_grams", dir)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
@@ -1141,7 +959,7 @@ object StreamingQueries {
     * stream-maintained index is indistinguishable from the batch
     * build. */
   def q73StreamingMinhashIndex(spark: SparkSession, dir: String): DataFrame = {
-    val landing = sharedCorpusLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "corpus")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q73_ckpt", dir)
     val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q73_bands", dir)
     val sigsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q73_sigs", dir)
@@ -1174,7 +992,7 @@ object StreamingQueries {
   def q74StreamingIvfIndex(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val landing = graft.io.TempPaths.scratchDir(spark, "graft_q74_in", dir)
-    landSlicedModulo(spark, dir, landing, emb, "vec_id", nFiles = 4)
+    landSlices(spark, landing, emb, 4, pmod(col("vec_id"), lit(4)))
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q74_ckpt", dir)
     val centTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q74_cents", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q74_ivf", dir)
@@ -1203,19 +1021,9 @@ object StreamingQueries {
     * "describe-the-corpus dashboard that is never stale" shape. The
     * exact-count baseline column stays a labeled one-shot pass, by the
     * p94 contract. */
-  /** The FULL-documents landing q75/q76/q77/q78 share (the profiling
-    * sketches and the vocabulary counts all ride the same ingest
-    * stream) — the sharedCorpusLanding device with no side split. */
-  private def sharedDocsLanding(spark: SparkSession, dir: String): String = {
-    val landing = graft.io.TempPaths.scratchDir(spark, "graft_q75_in", dir)
-    landSlicedModulo(spark, dir, landing, Tables.documents(spark, dir),
-      "doc_id", nFiles = 4)
-    landing
-  }
-
   def q75StreamingProfile(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val landing = sharedDocsLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "docs")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q75_ckpt", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q75_kmv", dir)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
@@ -1238,7 +1046,7 @@ object StreamingQueries {
     * maintenance story as every other bounded-state artifact. */
   def q76StreamingCountMin(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val landing = sharedDocsLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "docs")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q76_ckpt", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q76_cm", dir)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
@@ -1257,7 +1065,7 @@ object StreamingQueries {
     * float-at-power-of-two boundary, no sketch tolerance contract
     * needed. */
   def q77StreamingLog2Hist(spark: SparkSession, dir: String): DataFrame = {
-    val landing = sharedDocsLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "docs")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q77_ckpt", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q77_hist", dir)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
@@ -1289,7 +1097,7 @@ object StreamingQueries {
     * q68–q77 family as the eighth maintained-artifact shape. */
   def q78StreamingVocab(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val landing = sharedDocsLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "docs")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q78_ckpt", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q78_vocab", dir)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
@@ -1310,7 +1118,7 @@ object StreamingQueries {
     * the delta). The ninth maintained-artifact family. */
   def q79StreamingNoveltyIndex(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val landing = sharedCorpusLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "corpus")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q79_ckpt", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q79_shdf", dir)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
@@ -1331,7 +1139,7 @@ object StreamingQueries {
     * quality scoring here). */
   def q80StreamingLogprob(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val landing = sharedCorpusLanding(spark, dir)
+    val landing = sharedLanding(spark, dir, "corpus")
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q80_ckpt", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q80_tok", dir)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
@@ -1339,6 +1147,18 @@ object StreamingQueries {
     }
     graft.ops.TextAnalysis.unigramLogProbIncremental(spark,
       docs.filter(deltaSide(col("doc_id"))), idxTbl)
+  }
+
+  /** q81/q83's five ordered batches: corpus quarters 0 and 1, a
+    * RETRACTION of their doc_id % 7 == 1 documents, then quarters 2
+    * and 3. */
+  private def retractionBatches(corpus: DataFrame): DataFrame = {
+    val quarter = (i: Int) => corpus.filter(pmod(col("doc_id"), lit(4)) === i)
+      .withColumn("retract", lit(false))
+    inOrder(quarter(0), quarter(1),
+      corpus.filter(pmod(col("doc_id"), lit(4)) < 2 && col("doc_id") % 7 === 1)
+        .withColumn("retract", lit(true)),
+      quarter(2), quarter(3))
   }
 
   /** q81 — STREAMED RETRACTION: a right-to-be-forgotten batch rides
@@ -1362,15 +1182,7 @@ object StreamingQueries {
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(corpusSide(col("doc_id")))
     val landing = graft.io.TempPaths.scratchDir(spark, "graft_q81_in", dir)
-    val quarter = (i: Int) => corpus.filter(pmod(col("doc_id"), lit(4)) === i)
-    landSlices(spark, dir, landing, Seq(
-      quarter(0).withColumn("retract", lit(false)),
-      quarter(1).withColumn("retract", lit(false)),
-      corpus.filter(pmod(col("doc_id"), lit(4)) < 2 &&
-          col("doc_id") % 7 === 1)
-        .withColumn("retract", lit(true)),
-      quarter(2).withColumn("retract", lit(false)),
-      quarter(3).withColumn("retract", lit(false))))
+    landSlices(spark, landing, retractionBatches(corpus), 5, col("__slice"))
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q81_ckpt", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q81_shdf", dir)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
@@ -1412,15 +1224,7 @@ object StreamingQueries {
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(corpusSide(col("doc_id")))
     val landing = graft.io.TempPaths.scratchDir(spark, "graft_q83_in", dir)
-    val quarter = (i: Int) => corpus.filter(pmod(col("doc_id"), lit(4)) === i)
-    landSlices(spark, dir, landing, Seq(
-      quarter(0).withColumn("retract", lit(false)),
-      quarter(1).withColumn("retract", lit(false)),
-      corpus.filter(pmod(col("doc_id"), lit(4)) < 2 &&
-          col("doc_id") % 7 === 1)
-        .withColumn("retract", lit(true)),
-      quarter(2).withColumn("retract", lit(false)),
-      quarter(3).withColumn("retract", lit(false))))
+    landSlices(spark, landing, retractionBatches(corpus), 5, col("__slice"))
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q83_ckpt", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q83_shdf", dir)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl),
@@ -1464,11 +1268,12 @@ object StreamingQueries {
     val poison = emb.filter(pmod(col("vec_id"), lit(50)) === 0)
       .withColumn("vec_id", col("vec_id") + lit(10000000L))
     val landing = graft.io.TempPaths.scratchDir(spark, "graft_q82_in", dir)
-    landSlices(spark, dir, landing, Seq(
+    landSlices(spark, landing, inOrder(
       emb.filter(pmod(col("vec_id"), lit(2)) === 0).withColumn("retract", lit(false)),
       poison.withColumn("retract", lit(false)),
       poison.withColumn("retract", lit(true)),
-      emb.filter(pmod(col("vec_id"), lit(2)) === 1).withColumn("retract", lit(false))))
+      emb.filter(pmod(col("vec_id"), lit(2)) === 1).withColumn("retract", lit(false))),
+      4, col("__slice"))
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q82_ckpt", dir)
     val centsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q82_cents", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q82_ivf", dir)

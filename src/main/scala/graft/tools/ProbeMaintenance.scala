@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measure MAINTENANCE cost per cadence window vs index size at fixed
@@ -23,22 +22,11 @@ import org.apache.spark.sql.functions._
 object ProbeMaintenance {
 
   def main(args: Array[String]): Unit = {
+    import Dev.{median, num}
     val out = args.lift(0).getOrElse("MAINT_SCALING_DATA.json")
     val reps = args.lift(1).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.io.TempPaths.newWarehouseDir())
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.io.TempPaths.cleanupOnExit(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-
-    val sfs = sys.env.getOrElse("SPARK_GRAFT_PROBE_SFDIRS",
-      "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val spark = Dev.session(32, logLevel = "ERROR")
+    val sfs = Dev.envList("SPARK_GRAFT_PROBE_SFDIRS", Dev.DefaultSfDirs)
     def docs(dir: String) =
       spark.read.parquet(s"$dir/documents.parquet")
     // the FIXED delta: the sf0.01 catalog-row slice; each landed wave
@@ -48,17 +36,6 @@ object ProbeMaintenance {
     val deltaBase = docs("/root/testdata/sf0.01")
       .filter(col("doc_id") % 5 === 0).localCheckpoint()
     val cadence = 4
-
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    def median(ts: Seq[Double]): Double = ts.sorted.apply(ts.size / 2)
-    def slopeOf(pts: Seq[(Long, Double)]): Double = {
-      val xs = pts.map(p => math.log(math.max(1L, p._1).toDouble))
-      val ys = pts.map(p => math.log(p._2))
-      val (mx, my) = (xs.sum / xs.size, ys.sum / ys.size)
-      xs.zip(ys).map { case (x, y) => (x - mx) * (y - my) }.sum /
-        math.max(1e-12, xs.map(x => (x - mx) * (x - mx)).sum)
-    }
 
     var wave = 0
     def landWaves(tbl: String, startBatch: Long): Long = {
@@ -105,7 +82,7 @@ object ProbeMaintenance {
         val p = per.find(_._1 == mode).get
         (sf, p._2, p._3, p._4)
       }
-      val slope = slopeOf(pts.map(p => (p._2, p._3)))
+      val slope = Dev.logLogSlope(pts.map(p => (math.max(1L, p._2).toDouble, p._3)))
       println(s"MAINT $mode slope=${num(slope)}")
       val ptsJson = pts.map { case (sf, n, med, ts) =>
         s"""{"sf":"$sf","index_rows":$n,"median_sec":${num(med)},"reps_sec":${ts.map(num).mkString("[", ",", "]")}}"""

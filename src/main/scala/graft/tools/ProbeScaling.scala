@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measure O(|delta|) probe cost for the persisted-index families.
@@ -24,24 +24,13 @@ object ProbeScaling {
   def main(args: Array[String]): Unit = {
     val out = args.lift(0).getOrElse("PROBE_SCALING_DATA.json")
     val reps = args.lift(1).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.io.TempPaths.newWarehouseDir())
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.io.TempPaths.cleanupOnExit(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-
+    val spark = Dev.session(32)
+    import Dev.num
     // SPARK_GRAFT_PROBE_SFDIRS: comma-separated corpus dirs to build the
     // indexes from, smallest first — defaults to the three testdata SFs;
     // append an Amplify-derived scratch dir (e.g. sf0.8 = 8x sf0.1) to
     // extend the fixed-delta measurement past the fixture ceiling
-    val sfs = sys.env.getOrElse("SPARK_GRAFT_PROBE_SFDIRS",
-      "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val sfs = Dev.envList("SPARK_GRAFT_PROBE_SFDIRS", Dev.DefaultSfDirs)
     def docs(dir: String) =
       spark.read.parquet(s"$dir/documents.parquet")
     def emb(dir: String) =
@@ -77,9 +66,7 @@ object ProbeScaling {
     }
 
     // family name -> (per-sf: build index, return (indexRows, probe thunk))
-    case class Family(name: String,
-                      setup: String => (Long, () => DataFrame),
-                      teardown: () => Unit)
+    case class Family(name: String, setup: String => (Long, () => DataFrame))
     val drops = scala.collection.mutable.Buffer.empty[String]
     def tbl(s: String): String = { drops += s; s }
 
@@ -93,14 +80,14 @@ object ProbeScaling {
           graft.ops.Dedup.incrementalVerdictsAgainstIndex(spark, deltaDocs,
             bands, sigs, bands = 16, rowsPerBand = 8, shingleN = 3,
             threshold = 0.7))
-      }, () => ()),
+      }),
       Family("p56_ivf_assignment_probe", { sf =>
         val t = tbl("ps_p56_ivf")
         graft.io.Bucketing.dropTable(spark, t)
         graft.ops.Similarity.buildIvfIndex(emb(sf), t, nCentroids = 16, buckets = 8)
         (spark.table(t).count(), () =>
           graft.ops.Similarity.ivfTopKAgainstIndex(spark, queryEmb, t))
-      }, () => ()),
+      }),
       Family("p57_vector_index_probe", { sf =>
         val bands = tbl("ps_p57_bands"); val vecs = tbl("ps_p57_vecs")
         Seq(bands, vecs).foreach(graft.io.Bucketing.dropTable(spark, _))
@@ -109,7 +96,7 @@ object ProbeScaling {
         (spark.table(vecs).count(), () =>
           graft.ops.Similarity.incrementalCosineVerdictsAgainstIndex(spark,
             deltaEmb, bands, vecs, threshold = 0.45, bitsPerTable = bits))
-      }, () => ()),
+      }),
       Family("p63_linedf_probe", { sf =>
         val t = tbl("ps_p63_linedf")
         graft.io.Bucketing.dropTable(spark, t)
@@ -117,7 +104,7 @@ object ProbeScaling {
           docs(sf).filter(col("doc_id") % 5 =!= 0), t, buckets = 8)
         (spark.table(t).count(), () =>
           graft.ops.TextAnalysis.lineDedupIncremental(spark, deltaDocs, t))
-      }, () => ()),
+      }),
       Family("p110_shingledf_probe", { sf =>
         val t = tbl("ps_p110_shdf")
         graft.io.Bucketing.dropTable(spark, t)
@@ -125,7 +112,7 @@ object ProbeScaling {
           docs(sf).filter(col("doc_id") % 5 =!= 0), t, buckets = 8)
         (spark.table(t).count(), () =>
           graft.ops.Dedup.noveltyIncremental(spark, deltaDocs, t))
-      }, () => ()),
+      }),
       Family("q79_streamed_shingledf_probe", { sf =>
         val t = tbl("ps_q79_shdf")
         graft.io.Bucketing.dropTable(spark, t)
@@ -142,7 +129,7 @@ object ProbeScaling {
         }
         (spark.table(t).count(), () =>
           graft.ops.Dedup.noveltyIncremental(spark, deltaDocs, t))
-      }, () => ()),
+      }),
       Family("p65_gram_index_probe", { sf =>
         val t = tbl("ps_p65_grams")
         graft.io.Bucketing.dropTable(spark, t)
@@ -150,7 +137,7 @@ object ProbeScaling {
           docs(sf).filter(pmod(col("doc_id"), lit(10)) === 0), t)
         (spark.table(t).count(), () =>
           graft.ops.TextAnalysis.decontaminationAgainstIndex(spark, deltaTrain, t))
-      }, () => ()),
+      }),
       Family("p71_window_df_probe", { sf =>
         val t = tbl("ps_p71_windf")
         graft.io.Bucketing.dropTable(spark, t)
@@ -158,7 +145,7 @@ object ProbeScaling {
           docs(sf).filter(col("doc_id") % 5 =!= 0), t, k = 8, buckets = 8)
         (spark.table(t).count(), () =>
           graft.ops.Dedup.substringRemoveIncremental(spark, deltaDocs, t, k = 8))
-      }, () => ()),
+      }),
       Family("q69_streamed_windf_probe", { sf =>
         val t = tbl("ps_q69_windf")
         graft.io.Bucketing.dropTable(spark, t)
@@ -170,7 +157,7 @@ object ProbeScaling {
         }
         (spark.table(t).count(), () =>
           graft.ops.Dedup.substringRemoveIncremental(spark, deltaDocs, t, k = 8))
-      }, () => ()),
+      }),
       Family("p91_bm25_df_probe", { sf =>
         val t = tbl("ps_p91_bm25df"); val st = tbl("ps_p91_bm25st")
         Seq(t, st).foreach(graft.io.Bucketing.dropTable(spark, _))
@@ -179,7 +166,7 @@ object ProbeScaling {
         (spark.table(t).count(), () =>
           graft.ops.TextAnalysis.bm25TopKIncremental(spark, deltaDocs,
             bm25Queries, t, st))
-      }, () => ()),
+      }),
       // p91's REAL x axis (VERDICT r20 item 6): the plain family's
       // index is VOCABULARY-sized and the fixture vocabulary is ~31
       // terms at three of the four sweep points — honestly flagged
@@ -205,7 +192,7 @@ object ProbeScaling {
         (spark.table(t).count(), () =>
           graft.ops.TextAnalysis.bm25TopKIncremental(spark, deltaDocs,
             bm25Queries, t, st))
-      }, () => ()),
+      }),
       Family("q68_streamed_linedf_probe", { sf =>
         val t = tbl("ps_q68_linedf")
         graft.io.Bucketing.dropTable(spark, t)
@@ -218,7 +205,7 @@ object ProbeScaling {
         }
         (spark.table(t).count(), () =>
           graft.ops.TextAnalysis.lineDedupIncremental(spark, deltaDocs, t))
-      }, () => ()),
+      }),
       Family("q71_streamed_vector_probe", { sf =>
         val bands = tbl("ps_q71_bands"); val vecs = tbl("ps_q71_vecs")
         Seq(bands, vecs).foreach(graft.io.Bucketing.dropTable(spark, _))
@@ -233,7 +220,7 @@ object ProbeScaling {
         (spark.table(vecs).count(), () =>
           graft.ops.Similarity.incrementalCosineVerdictsAgainstIndex(spark,
             deltaEmb, bands, vecs, threshold = 0.45, bitsPerTable = bits))
-      }, () => ()),
+      }),
       Family("q72_streamed_gram_probe", { sf =>
         val t = tbl("ps_q72_grams")
         graft.io.Bucketing.dropTable(spark, t)
@@ -245,7 +232,7 @@ object ProbeScaling {
         }
         (spark.table(t).count(), () =>
           graft.ops.TextAnalysis.decontaminationAgainstIndex(spark, deltaTrain, t))
-      }, () => ()),
+      }),
       Family("q73_streamed_minhash_probe", { sf =>
         val bands = tbl("ps_q73_bands"); val sigs = tbl("ps_q73_sigs")
         Seq(bands, sigs).foreach(graft.io.Bucketing.dropTable(spark, _))
@@ -260,7 +247,7 @@ object ProbeScaling {
           graft.ops.Dedup.incrementalVerdictsAgainstIndex(spark, deltaDocs,
             bands, sigs, bands = 16, rowsPerBand = 8, shingleN = 3,
             threshold = 0.7))
-      }, () => ()),
+      }),
       Family("q74_streamed_ivf_probe", { sf =>
         val cents = tbl("ps_q74_cents"); val t = tbl("ps_q74_ivf")
         Seq(cents, t).foreach(graft.io.Bucketing.dropTable(spark, _))
@@ -273,7 +260,7 @@ object ProbeScaling {
         }
         (spark.table(t).count(), () =>
           graft.ops.Similarity.ivfTopKAgainstIndex(spark, queryEmb, t))
-      }, () => ()),
+      }),
       // the LIVE-tombstone window (VERDICT r17 item 5): the index grows
       // 100x+ under a FIXED unpurged retraction set, and the probe pays
       // the broadcast anti-join gate on every rep — flat slope proves
@@ -294,7 +281,7 @@ object ProbeScaling {
         (spark.table(t).count(), () =>
           graft.ops.Similarity.ivfTopKAgainstIndex(spark, queryEmb, t,
             tombstonesTable = Some(tombs)))
-      }, () => ()),
+      }),
       // the purge threshold's OTHER axis (VERDICT r18 item 7): p122
       // scales the index under a fixed gate; this family holds the
       // index FIXED (the sf0.1 assignment, the largest fixture) and
@@ -327,16 +314,13 @@ object ProbeScaling {
         (spark.table(tombs).count(), () =>
           graft.ops.Similarity.ivfTopKAgainstIndex(spark, queryEmb, t,
             tombstonesTable = Some(tombs)))
-      }, () => ()))
+      }))
 
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     // SPARK_GRAFT_PROBE_ONLY: comma-separated family-name prefixes, for
     // re-measuring a single family without paying the full sweep
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
+    val only = Dev.envList("SPARK_GRAFT_PROBE_ONLY")
     val selected = families.filter(f =>
-      only.forall(_.exists(f.name.startsWith)))
+      only.isEmpty || only.exists(f.name.startsWith))
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val rows = try selected.map { fam =>
@@ -357,7 +341,7 @@ object ProbeScaling {
         // largest point is seconds-scale and already stable
         val times = timeProbe(probe,
           if (sfIdx < sfs.size - 1) reps + 4 else reps)
-        val med = times.sorted.apply(times.size / 2)
+        val med = Dev.median(times)
         val secPerGb = if (idxBytes > 0) med / (idxBytes / 1e9) else 0.0
         println(s"PROBE ${fam.name} $sf index_rows=$idxRows " +
           s"index_bytes=$idxBytes sec_per_gb=${num(secPerGb)} " +
@@ -365,11 +349,7 @@ object ProbeScaling {
         (sf, idxRows, med, times, idxBytes)
       }
       // least-squares slope of log(t) vs log(indexRows)
-      val xs = per.map(p => math.log(math.max(1L, p._2).toDouble))
-      val ys = per.map(p => math.log(p._3))
-      val (mx, my) = (xs.sum / xs.size, ys.sum / ys.size)
-      val slope = xs.zip(ys).map { case (x, y) => (x - mx) * (y - my) }.sum /
-        math.max(1e-12, xs.map(x => (x - mx) * (x - mx)).sum)
+      val slope = Dev.logLogSlope(per.map(p => (math.max(1L, p._2).toDouble, p._3)))
       // degenerate-sweep guard (ADVICE r19): families whose x axis is a
       // FIXTURE property (p125's pending count scales with the
       // embeddings file, and the default sf0.001/sf0.01 embedding

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time a single catalog query in isolation (dev utility):
   * runMain graft.tools.ProfileQuery <sfDir> <name> [reps] */
 object ProfileQuery {
@@ -9,16 +7,7 @@ object ProfileQuery {
     val dir = args(0)
     val name = args(1)
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // table-backed rows (p54/p56-p59) must not litter the repo root
-      // with a ./spark-warehouse; same pid-token scratch as Bench
-      .config("spark.sql.warehouse.dir", graft.io.TempPaths.newWarehouseDir())
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Dev.session(32)
     val fn = graft.SparkEntry.queries(name)
     (1 to reps).foreach { i =>
       // match Bench: fresh scratch per rep, so stateful queries run COLD

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Empirical scaling-slope harness (dev tool, not driver-run): times every
   * catalog query at several scale factors in ONE JVM and fits the
   * per-query log-log wall-time slope, the evidence that separates "the
@@ -25,26 +23,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Scaling {
   def main(args: Array[String]): Unit = {
-    val sfDirs = sys.env.getOrElse("SPARK_GRAFT_SCALING_SFS",
-      "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    import Dev.{jstr, num}
+    val sfDirs = Dev.envList("SPARK_GRAFT_SCALING_SFS", Dev.DefaultSfDirs)
     val sfOf: String => Double = dir =>
       dir.split("/").last.stripPrefix("sf").toDouble
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALING_REPS", "3").toInt)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALING_FILE", "SCALING_DATA.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.io.TempPaths.newWarehouseDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.io.TempPaths.cleanupOnExit(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    val spark = Dev.session(cpus.toInt)
     graft.io.TempPaths.sweepStale(spark.sparkContext.applicationId,
       Seq(sys.props("java.io.tmpdir"),
         spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")))
@@ -60,14 +46,11 @@ object Scaling {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     spark.catalog.clearCache()
 
-    def parseSet(key: String): Option[Set[String]] =
-      sys.env.get(key).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-        .filter(_.nonEmpty)
-    val only = parseSet("SPARK_GRAFT_SCALING_ONLY")
-    val skip = parseSet("SPARK_GRAFT_SCALING_SKIP").getOrElse(Set.empty[String])
+    val only = Dev.envList("SPARK_GRAFT_SCALING_ONLY")
+    val skip = Dev.envList("SPARK_GRAFT_SCALING_SKIP")
     val queries = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) =>
-        only.forall(_.exists(name.startsWith)) && !skip.exists(name.startsWith) }
+        (only.isEmpty || only.exists(name.startsWith)) && !skip.exists(name.startsWith) }
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // (query -> sf -> median seconds); sf outer so each scale factor's
@@ -96,7 +79,7 @@ object Scaling {
           if (times.size == reps) {
             cells.getOrElseUpdate(name,
               scala.collection.mutable.LinkedHashMap.empty)
-              .update(sf, times.sorted.apply(reps / 2))
+              .update(sf, Dev.median(times))
           }
           System.gc()
         }
@@ -104,25 +87,11 @@ object Scaling {
       System.err.println(s"[scaling] finished $dir")
     }
 
-    def slope(pts: Seq[(Double, Double)]): Double = {
-      // least-squares fit of log10(t) against log10(sf)
-      val xs = pts.map(p => math.log10(p._1)); val ys = pts.map(p => math.log10(p._2))
-      val n = pts.size.toDouble
-      val sx = xs.sum; val sy = ys.sum
-      val sxx = xs.map(x => x * x).sum; val sxy = xs.zip(ys).map(p => p._1 * p._2).sum
-      (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    }
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     val rows = cells.map { case (name, bySf) =>
       val pts = bySf.toSeq.sortBy(_._1)
-      val all = if (pts.size >= 2) slope(pts) else Double.NaN
-      val last = if (pts.size >= 2) slope(pts.takeRight(2)) else Double.NaN
+      // least-squares fit of log(t) against log(sf)
+      val all = if (pts.size >= 2) Dev.logLogSlope(pts) else Double.NaN
+      val last = if (pts.size >= 2) Dev.logLogSlope(pts.takeRight(2)) else Double.NaN
       val times = pts.map { case (sf, t) => s""""sf$sf":${num(t)}""" }.mkString(",")
       s"""${jstr(name)}:{$times,"slope_all":${num(all)},"slope_last":${num(last)}}"""
     }.mkString("{", ",", "}")

@@ -31,6 +31,29 @@ class CatalogSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).limit(1).count() === 1L)
   }
 
+  test("every dev tool main is named in README.md") {
+    // one-off tools accumulate unseen: before this guard, ten of sixteen
+    // mains under graft/tools were unreferenced or answered a closed
+    // question. A tool that is not worth a README usage line goes.
+    import scala.jdk.CollectionConverters._
+    def read(p: java.nio.file.Path): String =
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val readme = read(java.nio.file.Paths.get("README.md"))
+    val objectDecl = """object\s+(\w+)""".r
+    val mains = java.nio.file.Files.list(java.nio.file.Paths.get("src/main/scala/graft/tools"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        val src = read(p)
+        // the object enclosing each `def main(`: the nearest declaration before it
+        """def\s+main\s*\(""".r.findAllMatchIn(src).flatMap(m =>
+          objectDecl.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption
+            .map(_.group(1))).toSeq
+      }.distinct
+    assert(mains.nonEmpty, "no tool mains found — is the working directory the repo root?")
+    val undocumented = mains.filterNot(n => readme.contains(s"graft.tools.$n"))
+    assert(undocumented.isEmpty,
+      s"tool mains missing from README.md: ${undocumented.sorted.mkString(", ")}")
+  }
+
   test("documented catalog counts match SparkEntry.queries.size") {
     // round 12 shipped two operators the docs never learned about —
     // README/SURVEY kept saying "124" while the catalog held 126. Pin

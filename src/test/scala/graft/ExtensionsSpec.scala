@@ -59,6 +59,78 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("minhash_sig in SQL signs bit-equal to Dedup.minhashSignature; the coefficient draw is pinned") {
+    import org.apache.spark.sql.functions.col
+    // the first (a, b) pair of the seed-42 draw over the 2^61-1 field:
+    // a drift in the draw (seed, field, reduction) fails here, and the
+    // SQL surface is held to the library below
+    val (a, b) = graft.ops.Dedup.coeffs(64)
+    assert(a.size === 64 && b.size === 64)
+    assert((a.head, b.head) === ((413876839547761934L, 2251733697900161872L)))
+    assert((a ++ b).forall(c => c >= 0L && c < graft.functions.MinHashSig.M))
+    val lib = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), graft.ops.Dedup.minhashSignature(col("text")).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    spark.sparkContext
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder().master("local[4]")
+      .appName("graft-ext-minhash-test")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    try {
+      s2.read.parquet(s"$sfDir/documents.parquet").createOrReplaceTempView("mh_docs")
+      val sql = s2.sql(
+        "SELECT doc_id, minhash_sig(split(text, ' '), 2) AS sig FROM mh_docs")
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      assert(lib.nonEmpty && sql.keySet === lib.keySet)
+      val differ = lib.keySet.filter(id => sql(id) != lib(id))
+      assert(differ.isEmpty, s"SQL and library signatures differ for ${differ.size} docs")
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
+  test("61-bit MinHash: signature agreement lies in a binomial band around exact shingle Jaccard") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // seeded pairs: a 120-token document and a copy with `t` tokens
+    // replaced at distinct positions, t spanning Jaccard ~1 down to ~0.1.
+    // t = 3 gives Jaccard ~0.89: the pair shape the old 31-bit field read
+    // at agreement ~0.39 (a 12-sigma miss)
+    val k = 64
+    val pairs = for (seed <- 1 to 5; t <- Seq(0, 1, 3, 6, 12, 25, 50)) yield {
+      val rnd = new scala.util.Random(seed * 1000 + t)
+      val doc = Vector.fill(120)(s"w${rnd.nextInt(5000)}")
+      val at = rnd.shuffle((0 until 120).toVector).take(t).toSet
+      val variant = doc.indices.map(i => if (at(i)) s"x${seed}_${t}_$i" else doc(i))
+      (seed * 100L + t, doc.mkString(" "), variant.mkString(" "))
+    }
+    def shingles(text: String): Set[String] =
+      text.split(" ").sliding(2).map(_.mkString(" ")).toSet
+    val texts = pairs.flatMap { case (id, x, y) => Seq((id * 2, x), (id * 2 + 1, y)) }
+    val sigs = texts.toDF("doc_id", "text")
+      .select(col("doc_id"), graft.ops.Dedup.minhashSignature(col("text"), k).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val report = pairs.map { case (id, x, y) =>
+      val (sx, sy) = (shingles(x), shingles(y))
+      val jaccard = (sx & sy).size.toDouble / (sx | sy).size
+      val agree = sigs(id * 2).zip(sigs(id * 2 + 1)).count { case (p, q) => p == q }
+        .toDouble / k
+      // 4 sigma of Binomial(k, J) / k, plus one step of granularity
+      val band = 4 * math.sqrt(jaccard * (1 - jaccard) / k) + 1.0 / k
+      (id, jaccard, agree, band)
+    }
+    assert(report.exists { case (_, j, _, _) => math.abs(j - 0.89) < 0.02 },
+      "the fixture must include a pair near Jaccard 0.89")
+    val outside = report.filter { case (_, j, a, band) => math.abs(a - j) > band }
+    assert(outside.isEmpty, "agreement outside the binomial band (id, jaccard, " +
+      s"agreement, band): ${outside.mkString(", ")}")
+  }
+
   test("RETRACT FROM / PURGE RETRACTIONS SQL surface: dispatch, guards, delegate passthrough") {
     spark.sparkContext // ensure the shared context exists first
     SparkSession.clearActiveSession()

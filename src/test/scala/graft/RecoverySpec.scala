@@ -37,7 +37,7 @@ class RecoverySpec extends SparkSpec {
 
   /** Land the sf events fixture as `n` ts-range part files with
     * ascending modification times (file-source batch order follows
-    * modTime; see StreamingQueries.landFixtureSplit for why). */
+    * modTime; see StreamingQueries.landSlices for why). */
   private def landSplit(n: Int): String = {
     val landing = Files.createTempDirectory("graft_recovery_in").toString
     spark.read.parquet(s"$sfDir/events.parquet")
@@ -591,6 +591,53 @@ class RecoverySpec extends SparkSpec {
     assert(spark.table(tbl).filter(col("df_corpus") <= 0).count() === 0L,
       "no cancelled pair may survive — the fold physically removed the poison")
     Seq(tbl, clean).foreach(graft.io.Bucketing.dropTable(spark, _))
+  }
+
+  test("partitioned swap killed mid-rename: restoring the backup keeps every row scannable") {
+    import graft.io.Bucketing
+    val docs = Tables.documents(spark, sfDir)
+    val tbl = "graft_rec_part_swap_tbl"
+    Seq(tbl, s"${tbl}_compacting", s"${tbl}_precompact")
+      .foreach(Bucketing.dropTable(spark, _))
+    // a batch_id-partitioned index: two partial waves, two partitions
+    (0 until 2).foreach { b =>
+      graft.ops.Dedup.appendShingleDfPartial(spark,
+        docs.filter(col("doc_id") % 2 === b), tbl, b.toLong)
+    }
+    val before = spark.table(tbl).localCheckpoint()
+    assert(before.count() > 0L)
+    intercept[IllegalStateException] {
+      Bucketing.compactBucketed(spark, tbl, injectCrashAtSwapStep = 1)
+    }
+    assert(!spark.catalog.tableExists(tbl))
+    val cat = spark.sessionState.catalog
+    def partitionsUnderOwnDir(t: String): Boolean = {
+      val ident = org.apache.spark.sql.catalyst.TableIdentifier(t)
+      def pathOf(u: java.net.URI): String =
+        new org.apache.hadoop.fs.Path(u).toUri.getPath.stripSuffix("/") + "/"
+      val root = pathOf(cat.getTableMetadata(ident).location)
+      cat.listPartitions(ident).forall(p => pathOf(p.location).startsWith(root))
+    }
+    assert(!partitionsUnderOwnDir(s"${tbl}_precompact"),
+      "the rename out moves the data but leaves the recorded partition paths behind")
+    // the repair's first step, alone: rename the backup back. A crash
+    // right after it leaves no needs-recover stamp, which is safe
+    // because the rename back returns the data to the directory the
+    // stale partition paths still name
+    spark.sql(s"ALTER TABLE ${tbl}_precompact RENAME TO $tbl")
+    assert(partitionsUnderOwnDir(tbl))
+    spark.catalog.refreshTable(tbl)
+    val got = spark.table(tbl)
+    assert(got.count() === before.count(),
+      "a full scan after the backup rename must return every original row")
+    assert(got.exceptAll(before).isEmpty && before.exceptAll(got).isEmpty)
+    // and the full repair then finishes the job from that state
+    assert(Bucketing.repairCompaction(spark, tbl))
+    Bucketing.compactBucketed(spark, tbl)
+    val after = spark.table(tbl)
+    assert(after.exceptAll(before).isEmpty && before.exceptAll(after).isEmpty)
+    Seq(tbl, s"${tbl}_compacting", s"${tbl}_precompact")
+      .foreach(Bucketing.dropTable(spark, _))
   }
 
   test("compaction swap killed mid-rename: repair restores the index, re-compact succeeds") {
